@@ -1,12 +1,13 @@
-"""Driver contract for the spark-graft builder (PySpark target).
+"""Driver contract for the spark-graft engine (PySpark target).
 
-The driver's verify runs ``entry(spark)`` as a smoke check, runs each
+A verifier runs ``entry(spark)`` as a smoke check, runs each
 ``queries()[name]`` at sf=0.01 and compares it against the matching
 ``oracle_sql()[name]`` via DuckDB (row-count + schema + order-insensitive
-value-hash -> CORRECTNESS_r{N}.json).
+value-hash). ``tests/oracle.py`` is the local twin of that check.
 
 All real logic lives in the ``masd_spark`` package; this file only adapts
-the registry (masd_spark/queries) to the driver's interface.
+the registry (masd_spark/queries) to the driver's interface. Both dicts
+list queries in registration order; no entry depends on its position.
 """
 
 from __future__ import annotations

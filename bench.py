@@ -69,8 +69,7 @@ def _ab_verdict(
 def _prev_committed_queries() -> dict[str, float]:
     """Per-query seconds from the newest GIT-TRACKED BENCH artifact —
     the drift reference for the targeted retry. Untracked/fresh files
-    are ignored for the same reason the rotation ignores untracked
-    CORRECTNESS artifacts: only committed history is a stable baseline."""
+    are ignored: only committed history is a stable baseline."""
     import re
     import subprocess
 

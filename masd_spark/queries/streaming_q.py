@@ -17,7 +17,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from masd_spark.queries import register
+from masd_spark.queries import register, scratch_base
 from masd_spark.sources.simulator import SimulatorConfig, write_json_drops
 from masd_spark.streaming.pipeline import (
     read_file_sensor_stream,
@@ -30,24 +30,11 @@ _KEY_COLS = ["window_start_ms", "station_id", "station_name", "sensor_id"]
 
 
 def _scratch_dir(prefix: str) -> str:
-    """Per-run scratch (drops / sink / checkpoint) for the micro-stream
-    twins — on tmpfs when available (optimization r8, guide §6/§2.1).
-
-    Every one of these queries writes its checkpoint deltas, sink parquet
-    and source drops to a throwaway tempdir; on this host /tmp is the
-    erratic block device the session already routes shuffle files around
-    (see session.py spark.local.dir), and a 4-batch stream pays it 32+
-    tiny fsynced files per trigger. Placement of scratch I/O changes no
-    emitted row. ``MASD_STREAM_SCRATCH`` overrides (e.g. a real cluster
-    points it at job-local SSD); without /dev/shm the behavior is exactly
-    the old tempfile default."""
-    base = os.getenv("MASD_STREAM_SCRATCH")
-    if base is None and os.path.isdir("/dev/shm"):
-        base = "/dev/shm/masd-stream-scratch"
-    if base:
-        os.makedirs(base, exist_ok=True)
-        return tempfile.mkdtemp(prefix=prefix, dir=base)
-    return tempfile.mkdtemp(prefix=prefix)
+    """Fresh per-run directory (drops / sink / checkpoint) for the
+    micro-stream twins under the engine's scratch base. A 4-batch stream
+    writes 32+ tiny fsynced files per trigger, which is why the base
+    prefers tmpfs; placement of scratch I/O changes no emitted row."""
+    return tempfile.mkdtemp(prefix=prefix, dir=scratch_base())
 
 
 @contextlib.contextmanager

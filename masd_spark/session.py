@@ -12,6 +12,15 @@ import os
 
 from pyspark.sql import SparkSession
 
+
+def tmpfs_dir(name: str) -> str | None:
+    """``/dev/shm/<name>`` when the host has a tmpfs at /dev/shm, else
+    None. The one place the engine decides whether scratch can live in
+    memory: Spark's local dirs (below) and the query scratch base
+    (queries/__init__.py:scratch_base) both build on it."""
+    return os.path.join("/dev/shm", name) if os.path.isdir("/dev/shm") else None
+
+
 # Configs that must hold on ANY session running our queries, including a
 # driver-provided session we did not build. All of these are runtime-settable.
 RUNTIME_CONFS: dict[str, str] = {
@@ -139,8 +148,8 @@ def get_spark(
     # erratic block-device latency (observed multi-second stalls on tiny
     # shuffles). On a real cluster spark.local.dir is per-node SSD instead.
     local_dir = os.getenv("SPARK_LOCAL_DIRS")
-    if local_dir is None and master.startswith("local") and os.path.isdir("/dev/shm"):
-        local_dir = "/dev/shm/masd-spark-local"
+    if local_dir is None and master.startswith("local"):
+        local_dir = tmpfs_dir("masd-spark-local")
     if local_dir:
         os.makedirs(local_dir, exist_ok=True)
         builder = builder.config("spark.local.dir", local_dir)

@@ -54,9 +54,9 @@ def read_kafka_sensor_stream(
     starting_offsets: str = "latest",
 ) -> DataFrame:
     """Kafka source by topic pattern (reference: consumer.py:83-90).
-    Requires the spark-sql-kafka package on the classpath; in this
-    container there is no Kafka, so tests use the file/rate sources below
-    — the downstream pipeline is identical.
+    Requires the spark-sql-kafka package on the classpath and a broker;
+    tests use the file source below instead — the downstream pipeline is
+    identical.
     """
     return (
         spark.readStream.format("kafka")
@@ -77,24 +77,6 @@ def read_file_sensor_stream(
         spark.readStream.schema(SENSOR_SCHEMA)
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .json(path)
-    )
-
-
-def rate_sensor_stream(spark: SparkSession, rows_per_second: int = 100) -> DataFrame:
-    """Synthetic load source: rate -> sensor-reading shape (value malformed
-    for ~5% of rows). Useful for soak/throughput tests without Kafka.
-    """
-    rate = spark.readStream.format("rate").option(
-        "rowsPerSecond", rows_per_second
-    ).load()
-    return rate.select(
-        F.lit("Perugia").alias("station_name"),
-        F.lit("perugia").alias("station_id"),
-        (F.col("value") % 15).cast("string").alias("sensor_id"),
-        F.unix_millis(F.col("timestamp")).alias("timestamp"),
-        F.when(F.col("value") % 20 == 0, F.lit("<<bad_data>>"))
-        .otherwise((F.col("value") % 100).cast("string"))
-        .alias("value"),
     )
 
 
@@ -127,7 +109,7 @@ def sensor_pipeline(
 
 def parse_kafka_sensor_stream(raw: DataFrame) -> DataFrame:
     """Kafka binary envelope -> typed readings (reference:
-    consumer.py:100-102); file/rate sources skip this step."""
+    consumer.py:100-102); the file source skips this step."""
     return parse_json_records(raw, SENSOR_SCHEMA, value_col="value")
 
 

@@ -2,12 +2,18 @@
 
 Everything else in the suite runs ``local[N]`` — one JVM, where shuffle is
 an in-process memory copy and task serialization never crosses a process
-boundary. This module runs the nine headline queries plus one
-transformWithStateInPandas streaming flow under ``local-cluster[2,4,4096]``
-(the in-sandbox analogue of the reference's YARN 3x2-core topology,
-/root/reference/compose/spark.yml:46-54): a real Master, two Worker JVMs,
+boundary. This module runs, in ONE ``local-cluster[2,4,4096]`` session
+(the single-host analogue of the reference's YARN 3x2-core topology in
+its compose/spark.yml:46-54: a real Master, two Worker JVMs,
 executor-side Python workers, network shuffle, and closure/Arrow
-serialization over the wire.
+serialization over the wire):
+
+- the nine headline queries;
+- one transformWithStateInPandas streaming flow;
+- the 50 window queries below (TPC-H, ANN, graph, text, streaming, the
+  PCA power iteration), value-checked against DuckDB. Anything that
+  silently depended on single-JVM locality (driver-side state, lineage
+  through Python objects, partitioning assumptions) fails here.
 
 The cluster session lives in a subprocess: pyspark's JVM singleton would
 otherwise collide with the session-scoped local[8] fixture.
@@ -21,14 +27,71 @@ import subprocess
 import sys
 from pathlib import Path
 
+import pytest
+
 REPO = Path(__file__).resolve().parent.parent
 
+# The window queries, a fixed list: cluster coverage must not move when
+# queries are registered or reordered.
+WINDOW_QUERIES = (
+    "masd_sensor_rollup",
+    "ann_cosine_topk",
+    "ann_ivf_topk",
+    "ann_ivf_persisted_topk",
+    "cluster_kmeans_embeddings",
+    "ann_lsh_topk",
+    "ann_quantized_topk",
+    "emb_pca_top_component",
+    "ann_pq_topk",
+    "ann_ivfpq_topk",
+    "ann_pq_persisted_topk",
+    "ann_mmr_rerank",
+    "cluster_kmeans_embeddings_exact",
+    "ann_ivf_exact_refined_topk",
+    "ann_ivf_refined_topk",
+    "emb_pca_power_iteration",
+    "multimodal_frame_sample",
+    "multimodal_resize",
+    "multimodal_byte_features",
+    "q11_important_stock",
+    "q15_top_supplier",
+    "layout_range_pruned_scan",
+    "layout_zorder_pruned_scan",
+    "stat_theil_sen_trend",
+    "graph_triangle_counts_deg",
+    "graph_bfs_distances",
+    "graph_kcore_parts",
+    "graph_label_propagation",
+    "graph_pagerank_trade_exact",
+    "graph_pagerank_trade",
+    "sketch_mg_heavy_users",
+    "ts_cusum_changepoints",
+    "ts_autocorrelation",
+    "text_language_id",
+    "text_simhash",
+    "text_bm25_search",
+    "text_rrf_hybrid_search",
+    "corpus_mixture_report",
+    "pipeline_llm_dataprep",
+    "pipeline_dsir_importance",
+    "sample_stratified_lang",
+    "sample_upsample_mixture",
+    "chunk_documents_udtf",
+    "streaming_masd_rollup",
+    "streaming_heavy_hitters",
+    "streaming_dedup_ingest",
+    "streaming_timer_sessions",
+    "streaming_sensor_ewma",
+    "streaming_interval_join",
+    "dedup_ngram_jaccard",
+)
+
 _SCRIPT = r"""
-import json, sys, tempfile
+import json, os, sys, tempfile
 from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tests")
+# cwd is the repository root, which PYTHONPATH already carries
+sys.path.insert(0, os.path.join(os.getcwd(), "tests"))
 
 from masd_spark.session import get_spark
 from masd_spark.vendor import ensure_protobuf, ensure_protobuf_on_session
@@ -46,9 +109,7 @@ spark = get_spark(
         "spark.sql.warehouse.dir": tempfile.mkdtemp(prefix="lc_warehouse_"),
         # executor JVMs are child processes and inherit our env, but be
         # explicit: executor-side Python workers must import masd_spark
-        "spark.executorEnv.PYTHONPATH": ":".join(
-            p for p in ["/root/repo", __import__("os").environ.get("PYTHONPATH", "")] if p
-        ),
+        "spark.executorEnv.PYTHONPATH": os.environ["PYTHONPATH"],
     },
 )
 # Cluster-safe route as well: ships the shim zip via addPyFile.
@@ -63,18 +124,28 @@ from oracle import compare_query
 
 REG = load_all()
 SF = "/root/testdata/sf0.01"
-headline_ok, headline_fail = [], []
-for name, spec in REG.items():
-    if not spec.headline:
-        continue
+
+
+def check(name):
+    spec = REG[name]
     try:
         if spec.oracle is not None:
             compare_query(spark, spec, SF)
         else:
             assert spec.fn(spark, SF).count() >= 0
-        headline_ok.append(name)
+        return None
     except Exception as exc:  # noqa: BLE001
-        headline_fail.append([name, repr(exc)[:300]])
+        return [name, repr(exc)[:300]]
+
+
+headline_ok, headline_fail = [], []
+for name, spec in REG.items():
+    if spec.headline:
+        err = check(name)
+        if err:
+            headline_fail.append(err)
+        else:
+            headline_ok.append(name)
 
 # TWS MapState heavy hitters through real executor-side state servers.
 tws_ok, tws_err = False, None
@@ -101,6 +172,16 @@ try:
 except Exception as exc:  # noqa: BLE001
     tws_err = repr(exc)[:500]
 
+from test_local_cluster import WINDOW_QUERIES
+
+window_ok, window_fail = [], []
+for name in WINDOW_QUERIES:
+    err = check(name)
+    if err:
+        window_fail.append(err)
+    else:
+        window_ok.append(name)
+
 print(
     "LCRESULT " + json.dumps(
         {
@@ -110,6 +191,8 @@ print(
             "headline_fail": headline_fail,
             "tws_ok": tws_ok,
             "tws_err": tws_err,
+            "window_ok": window_ok,
+            "window_fail": window_fail,
         }
     )
 )
@@ -117,90 +200,19 @@ spark.stop()
 """
 
 
-_WINDOW_SCRIPT = r"""
-import json, sys, tempfile
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tests")
-
-from masd_spark.session import get_spark
-from masd_spark.vendor import ensure_protobuf
-
-ensure_protobuf()
-spark = get_spark(
-    app_name="lc-window",
-    master="local-cluster[2,4,4096]",
-    shuffle_partitions=16,
-    driver_memory="4g",
-    extra_confs={
-        "spark.sql.warehouse.dir": tempfile.mkdtemp(prefix="lc_warehouse_"),
-        "spark.executorEnv.PYTHONPATH": ":".join(
-            p for p in ["/root/repo", __import__("os").environ.get("PYTHONPATH", "")] if p
-        ),
-    },
-)
-spark.range(1000).selectExpr("id % 7 k").groupBy("k").count().count()
-
-from masd_spark.queries import load_all, DRIVER_WINDOW
-from oracle import compare_query
-
-REG = load_all()
-SF = "/root/testdata/sf0.01"
-ok, fail = [], []
-for name in list(REG)[:DRIVER_WINDOW]:
-    spec = REG[name]
-    try:
-        if spec.oracle is not None:
-            compare_query(spark, spec, SF)
-        else:
-            assert spec.fn(spark, SF).count() >= 0
-        ok.append(name)
-    except Exception as exc:  # noqa: BLE001
-        fail.append([name, repr(exc)[:300]])
-print("LCRESULT " + json.dumps({"ok": len(ok), "fail": fail}))
-spark.stop()
-"""
-
-
-def test_local_cluster_driver_window():
-    """The ENTIRE round-5 driver verification window — TPC-H full,
-    warehouse, analytics, graph, the PCA power iteration — value-checked
-    against DuckDB under real multi-process execution. Anything that
-    silently depended on single-JVM locality (driver-side state, lineage
-    through Python objects, partitioning assumptions) fails here before
-    the external driver sees it."""
-    env = dict(os.environ)
-    env["PYTHONPATH"] = f"{REPO}:{env.get('PYTHONPATH', '')}".rstrip(":")
-    proc = subprocess.run(
-        [sys.executable, "-c", _WINDOW_SCRIPT],
-        capture_output=True,
-        text=True,
-        # 540s fit an idle box but flaked inside a full-suite run (r8:
-        # 376s isolated, >540s after 30 min of suite-induced page-cache
-        # pressure). The timeout guards against a HUNG subprocess, not
-        # a slow window — size it for the contended case.
-        timeout=1200,
-        env=env,
-        cwd=str(REPO),
-    )
-    # marker may share a line with a stray \r-progress fragment; split on
-    # the marker itself rather than requiring it at line start
-    lines = [l[l.find("LCRESULT "):] for l in proc.stdout.splitlines() if "LCRESULT " in l]
-    assert lines, f"no result line\nstdout:{proc.stdout[-2000:]}\nstderr:{proc.stderr[-3000:]}"
-    res = json.loads(lines[-1][len("LCRESULT "):])
-    assert not res["fail"], res["fail"]
-    from masd_spark.queries import DRIVER_WINDOW
-
-    assert res["ok"] == DRIVER_WINDOW
-
-
-def test_local_cluster_smoke():
+@pytest.fixture(scope="module")
+def cluster_result():
+    """Runs the cluster script once; both tests below read its result."""
     env = dict(os.environ)
     env["PYTHONPATH"] = f"{REPO}:{env.get('PYTHONPATH', '')}".rstrip(":")
     proc = subprocess.run(
         [sys.executable, "-c", _SCRIPT],
         capture_output=True,
         text=True,
-        timeout=540,
+        # guards against a HUNG subprocess, not a slow one: sized for a
+        # contended full-suite run (the window alone once took >540 s
+        # after 30 min of suite-induced page-cache pressure)
+        timeout=1740,
         env=env,
         cwd=str(REPO),
     )
@@ -208,7 +220,19 @@ def test_local_cluster_smoke():
     # the marker itself rather than requiring it at line start
     lines = [l[l.find("LCRESULT "):] for l in proc.stdout.splitlines() if "LCRESULT " in l]
     assert lines, f"no result line\nstdout:{proc.stdout[-2000:]}\nstderr:{proc.stderr[-3000:]}"
-    res = json.loads(lines[-1][len("LCRESULT "):])
+    return json.loads(lines[-1][len("LCRESULT "):])
+
+
+def test_local_cluster_driver_window(cluster_result):
+    """The 50 window queries, value-checked against DuckDB under real
+    multi-process execution."""
+    res = cluster_result
+    assert not res["window_fail"], res["window_fail"]
+    assert res["window_ok"] == list(WINDOW_QUERIES)
+
+
+def test_local_cluster_smoke(cluster_result):
+    res = cluster_result
     # driver + 2 executor block managers => genuinely multi-process
     assert res["block_managers"] >= 3, res
     assert res["default_parallelism"] == 8, res

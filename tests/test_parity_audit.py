@@ -1,14 +1,12 @@
 """Meta-audit: every oracled registered query must have a LOCAL
 compare_query parity row somewhere in tests/.
 
-The driver's CORRECTNESS harness only executes the first DRIVER_WINDOW
-registered queries per round, and the standing rotation
-(masd_spark/queries/__init__.py:rotation_order) decides which those are.
-A query whose first-ever value check happens ON the driver is a latent
-RED row — round-5 found two such (basket_brand_affinity,
-bi_rfm_segments, both already inside the round-5 window). This audit
-makes the invariant structural: registering an oracled query without a
-local compare_query test fails the suite immediately.
+Every oracled query is value-checked through ``__spark_entry__.py``'s
+``oracle_sql()``. A query whose first-ever value check happens there,
+outside this suite, is a latent RED row — round-5 found two such
+(basket_brand_affinity, bi_rfm_segments). This audit makes the invariant
+structural: registering an oracled query without a local compare_query
+test fails the suite immediately.
 
 Detection is AST-based, matching the two idioms the suite uses:
   - direct:   compare_query(spark, REGISTRY["name"], SF_ORACLE)

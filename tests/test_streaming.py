@@ -1332,6 +1332,51 @@ def test_keyed_sink_rejects_unknown_on_error(spark):
         start_keyed_sink(df, "/tmp/x", "/tmp/ckpt", on_error="abort")
 
 
+def test_kafka_envelope_decode_and_validity(spark):
+    """The Kafka source's decode step, in batch: binary ``value`` payloads
+    -> the typed SENSOR_SCHEMA columns -> validity flags. A
+    ``<<bad_data>>`` reading and a truncated JSON envelope are both kept
+    as rows (PERMISSIVE decode) and are the only ones marked invalid."""
+    import json
+
+    from pyspark.sql import types as T
+
+    from masd_spark.operators.validate import SENSOR_SCHEMA, classify_validity
+    from masd_spark.streaming.pipeline import parse_kafka_sensor_stream
+
+    def reading(sensor, ts, value):
+        return json.dumps({
+            "station_name": "Perugia", "station_id": "perugia",
+            "sensor_id": sensor, "timestamp": ts, "value": value,
+        })
+
+    payloads = [
+        reading("1", 1_700_000_000_000, "21.5"),
+        reading("2", 1_700_000_001_000, "-3"),
+        reading("3", 1_700_000_002_000, "<<bad_data>>"),
+        reading("4", 1_700_000_003_000, "7.25"),
+        reading("5", 1_700_000_004_000, "0")[:40],  # truncated envelope
+    ]
+    raw = spark.createDataFrame(
+        [(p.encode(),) for p in payloads],
+        T.StructType([T.StructField("value", T.BinaryType())]),
+    )
+    decoded = parse_kafka_sensor_stream(raw)
+    assert decoded.schema == SENSOR_SCHEMA
+
+    rows = classify_validity(decoded).collect()
+    assert len(rows) == len(payloads)
+    assert [tuple(r[:5]) for r in rows[:4]] == [
+        ("Perugia", "perugia", "1", 1_700_000_000_000, "21.5"),
+        ("Perugia", "perugia", "2", 1_700_000_001_000, "-3"),
+        ("Perugia", "perugia", "3", 1_700_000_002_000, "<<bad_data>>"),
+        ("Perugia", "perugia", "4", 1_700_000_003_000, "7.25"),
+    ]
+    assert rows[4]["value"] is None
+    assert [r["value_numeric"] for r in rows] == [21.5, -3.0, None, 7.25, None]
+    assert [r["is_valid"] for r in rows] == [True, True, False, True, False]
+
+
 def test_simulator_default_stations_not_aliased():
     """Regression (round-5 review): cfg.stations defaulted to the shared
     module-level list, so one caller's mutation changed every future
